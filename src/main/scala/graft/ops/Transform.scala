@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,8 +17,10 @@ import graft.schema.CallDataSchema._
   *     a Python UDF — same passthrough-on-parse-failure semantics, but the
   *     projection stays in whole-stage codegen (the reference pays a Python
   *     worker round-trip per row, SURVEY §3.1).
-  *   - the 14 sequential withColumn timestamp conversions build via foldLeft;
-  *     Catalyst's CollapseProject fuses them into one Project (SURVEY §4).
+  *   - the 14 timestamp conversions, the E3 merges and the five key
+  *     aliases are each one `withColumns` projection, not a `withColumn`
+  *     fold, so analysis builds one Project per step instead of one per
+  *     column for CollapseProject to fuse later (SURVEY §4).
   *   - surrogate keys offer a deterministic variant (SURVEY §7.3).
   */
 object Transform {
@@ -24,20 +28,16 @@ object Transform {
   /** E1+E2+P4 (`transform.py:41-68`): event_date substring of the *raw*
     * string, then AM/PM→24h + to_timestamp over all 14 timestamp columns. */
   def processTimestamps(df: DataFrame): DataFrame = {
-    val withDate = df.withColumn("event_date",
-      substring(col(timestampColumns.head), 1, 10))
-    timestampColumns.filter(withDate.columns.contains).foldLeft(withDate) {
-      (acc, c) =>
-        acc.withColumn(c,
-          to_timestamp(to_24h(col(c)), "MM/dd/yyyy HH:mm:ss"))
-    }
+    val converted = timestampColumns.filter(df.columns.contains)
+      .map(c => c -> to_timestamp(to_24h(col(c)), "MM/dd/yyyy HH:mm:ss"))
+    df.withColumns(ListMap(
+      ("event_date" -> substring(col(timestampColumns.head), 1, 10)) +: converted: _*))
   }
 
   /** E3 (`transform.py:71-97`): six SPD/CARE first-non-null merges. */
   def mergeResponseTimes(df: DataFrame): DataFrame =
-    responseMerges.foldLeft(df) { case (acc, (target, a, b)) =>
-      acc.withColumn(target, coalesce(col(a), col(b)))
-    }
+    df.withColumns(ListMap(
+      responseMerges.map { case (target, a, b) => target -> coalesce(col(a), col(b)) }: _*))
 
   /** P2 (`transform.py:99-110`): drop merged agency pairs + geo columns. */
   def dropAgencyColumns(df: DataFrame): DataFrame =
@@ -130,8 +130,9 @@ object Transform {
       else monotonically_increasing_id()
     // One shared id column, aliased five ways — same observable result as the
     // reference's five monotonically_increasing_id calls, evaluated once.
-    val withId = df.withColumn("__sk", id)
-    skCols.foldLeft(withId)((acc, c) => acc.withColumn(c, col("__sk"))).drop("__sk")
+    df.withColumn("__sk", id)
+      .withColumns(ListMap(skCols.map(_ -> col("__sk")): _*))
+      .drop("__sk")
   }
 
   /** P9 (`transform.py:226-234`): post-transform validation. */

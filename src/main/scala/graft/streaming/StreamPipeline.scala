@@ -57,11 +57,9 @@ object StreamPipeline {
     * duration columns to int. The when-guard has no otherwise → nulls stay
     * null; empty-after-strip strings cast to null (non-ANSI). */
   def transformTimeFields(df: DataFrame): DataFrame =
-    StreamSchema.durationColumns.foldLeft(df) { (acc, c) =>
-      acc.withColumn(c,
-        when(col(c).isNotNull,
-          trim(regexp_replace(col(c), "[^0-9]", "")).cast(IntegerType)))
-    }
+    df.withColumns(StreamSchema.durationColumns.map { c =>
+      c -> when(col(c).isNotNull, trim(regexp_replace(col(c), "[^0-9]", "")).cast(IntegerType))
+    }.toMap)
 
   /** Sink contract for the per-epoch write (S11). The reference's Cassandra
     * table upserts on PK `cad_event_number`; local stand-in is an

@@ -11,7 +11,6 @@ object RunBatch {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RunBatch <csvPath> <outDir> [--infer-schema]")
     val Array(csvPath, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.util.Sessions.build("graft-batch-etl")
     try {
       val counts = graft.ops.Load.runBatch(spark, csvPath, outDir,

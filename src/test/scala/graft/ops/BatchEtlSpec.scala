@@ -2,8 +2,12 @@ package graft.ops
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Row
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -153,6 +157,84 @@ class BatchEtlSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft_batch").toString
     val counts = Load.runBatch(spark, fixture, out)
     assert(counts("fact_call") == 6L)
+  }
+
+  test("processTimestamps is one projection over its input (E1+E2+P4)") {
+    Transform.processTimestamps(raw).queryExecution.analyzed match {
+      case Project(_, child) => assert(child == raw.queryExecution.analyzed)
+      case other => fail(s"expected one Project over the scan, got\n$other")
+    }
+  }
+
+  test("footer verification counts what a parquet re-read counts, in one file or several (S6)") {
+    val out = Files.createTempDirectory("graft_footer").toString
+    val df = transformed.repartition(3)
+    for ((coalesceTo, files) <- Seq(Some(1) -> 1, None -> 3)) {
+      val name = s"files_$files"
+      val n = new Load.ParquetSink(spark, out, coalesceTo).write(df, name)
+      val dir = s"$out/${name}_parquet"
+      assert(new java.io.File(dir).listFiles.count(_.getName.endsWith(".parquet")) == files)
+      assert(n == spark.read.parquet(dir).count())
+      assert(n == 6L)
+    }
+    // an empty frame still leaves one data file, with the schema and no rows
+    assert(new Load.ParquetSink(spark, out).write(df.limit(0), "empty") == 0L)
+  }
+
+  test("footer verification rejects a data file whose columns differ from the frame's (S6)") {
+    val dir = Files.createTempDirectory("graft_footer_cols").toString + "/t"
+    val fact = CallDataSchema.starTables.head._2
+    transformed.select(fact.map(col): _*).write.parquet(dir)
+    assert(Load.footerRows(spark, dir, fact) == 6L)
+    transformed.select("cad_event_number").write.mode("append").parquet(dir)
+    val e = intercept[IllegalStateException](Load.footerRows(spark, dir, fact))
+    assert(e.getMessage.contains("has columns cad_event_number;"))
+  }
+
+  test("a failing table write is rethrown after the other writes end, and the persisted rows are released") {
+    // the first table fails at once, so a call that returned on the first
+    // failure would leave the other five writes unfinished
+    val out = Files.createTempDirectory("graft_star_fail").toString
+    val parquet = new Load.ParquetSink(spark, out)
+    val boom = new RuntimeException("fact_call sink is down")
+    val sink = new Load.TableSink {
+      def write(df: DataFrame, tableName: String): Long =
+        if (tableName == "fact_call") throw boom else parquet.write(df, tableName)
+    }
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val thrown = intercept[RuntimeException](Load.saveStarSchema(transformed, sink))
+    assert(thrown eq boom)
+    GraftTestBridge.drainListenerBus(sc)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
+    assert(sc.getPersistentRDDs.keySet == persistedBefore)
+    assert(transformed.storageLevel == StorageLevel.NONE) // and no cache-manager entry
+    CallDataSchema.starTables.map(_._1).filterNot(_ == "fact_call").foreach { t =>
+      assert(spark.read.parquet(s"$out/${t}_parquet").count() == 6L, t)
+    }
+  }
+
+  test("runBatch starts exactly 9 Spark jobs on the fixture: no per-table re-read") {
+    val sc = spark.sparkContext
+    val group = "graft-runBatch-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val out = Files.createTempDirectory("graft_batch_jobs").toString
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "runBatch job count")
+    try Load.runBatch(spark, fixture, out)
+    finally {
+      sc.clearJobGroup()
+      GraftTestBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    // validate's isEmpty, the anti-join's distinct (shuffle) and broadcast,
+    // one write per table; a footer check starts none
+    assert(jobs.get == 9)
   }
 
   test("missing required column fails validation (P9)") {
