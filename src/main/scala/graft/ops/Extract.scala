@@ -2,9 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
-/** Batch CSV source (SURVEY §2.1 S1-S4; reference `extract.py:29-119`). */
+/** Batch CSV source (SURVEY §2.1 S1-S3; reference `extract.py:29-119`). The
+  * reference's S4 raw-scan persist is moved post-transform, into
+  * [[Load.saveStarSchema]]. */
 object Extract {
 
   /** S1: sampled schema inference — a schema-only pass over the file
@@ -41,13 +42,6 @@ object Extract {
   def extract(spark: SparkSession, path: String,
               sampleRatio: Double = 0.01, maxRows: Option[Int] = None): DataFrame =
     readCsv(spark, path, inferSchema(spark, path, sampleRatio), maxRows)
-
-  /** S4: disk-only persist (`extract.py:76`). Deviation from the reference
-    * documented in SURVEY §3.1: the raw-scan persist there still recomputes
-    * the whole 12-step transform chain per star-table write. Callers of the
-    * full pipeline should persist *post-transform* instead (see
-    * [[Load.saveStarSchema]]), which this helper also serves. */
-  def persistDiskOnly(df: DataFrame): DataFrame = df.persist(StorageLevel.DISK_ONLY)
 
   /** JSONL source — the line-delimited-JSON format web-scale corpora
     * actually ship in (one document object per line, usually gzip or

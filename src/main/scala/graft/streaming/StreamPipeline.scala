@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.IntegerType
   *   - T4: we always set `checkpointLocation` (the reference has none — no
   *     recovery, at-most-once across restarts);
   *   - per-epoch the reference triggers 3 actions on the same un-cached
-  *     micro-batch (count, show, write — SURVEY §3.2); we cache the epoch
-  *     DataFrame across them.
+  *     micro-batch (count, show, write — SURVEY §3.2); we run one, the
+  *     sink write, and observe the batch's row count on it.
   */
 object StreamPipeline {
 
@@ -63,7 +63,12 @@ object StreamPipeline {
 
   /** Sink contract for the per-epoch write (S11). The reference's Cassandra
     * table upserts on PK `cad_event_number`; local stand-in is an
-    * append-only parquet log collapsed to latest-per-key on read. */
+    * append-only parquet log collapsed to latest-per-key on read.
+    *
+    * `write` must run the frame it is given, by an action on it or on a
+    * frame derived from it, before it returns: [[processBatch]] reads the
+    * batch's row count from that run and waits for it. A `write` that
+    * returns without running the frame blocks its micro-batch. */
   trait StreamSink {
     def write(df: DataFrame, epochId: Long): Unit
   }
@@ -92,18 +97,23 @@ object StreamPipeline {
   }
 
   /** T3+T7 (`consumer_cassandra.py:198-226`): the micro-batch body — E8
-    * casts, insert_timestamp stamp, count, sink write; failed batches are
-    * logged and dropped. Returns the record count (driver-observable). */
+    * casts, insert_timestamp stamp, sink write; failed batches are logged
+    * and dropped. Returns the record count (driver-observable), or -1 for a
+    * failed batch.
+    *
+    * One Spark job per batch: the count is an observed metric of the sink's
+    * write, not an action of its own, so the epoch is neither cached nor
+    * recomputed (the reference evaluates it 3×). The count is read only
+    * after `write` returns, so a write that throws never waits for it. */
   def processBatch(df: DataFrame, epochId: Long, sink: StreamSink): Long =
     try {
-      val stamped = transformTimeFields(df)
-        .withColumn("insert_timestamp", current_timestamp())
-        .persist() // one evaluation for count + write (reference recomputes 3×)
-      try {
-        val n = stamped.count()
-        if (n > 0) sink.write(stamped, epochId)
-        n
-      } finally stamped.unpersist()
+      val rows = Observation()
+      sink.write(
+        transformTimeFields(df)
+          .withColumn("insert_timestamp", current_timestamp())
+          .observe(rows, count(lit(1)).as("rows")),
+        epochId)
+      rows.get("rows").asInstanceOf[Long]
     } catch {
       case e: Exception =>
         System.err.println(s"[stream] error processing batch $epochId: ${e.getMessage}")

@@ -18,7 +18,6 @@ object RunStream {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: RunStream <jsonDir> <sinkDir> <checkpointDir>")
     val Array(inDir, sinkDir, ckptDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.util.Sessions.build("graft-stream")
     try {
       // file-source twin of the Kafka value column

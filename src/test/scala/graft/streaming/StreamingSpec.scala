@@ -2,6 +2,13 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -84,6 +91,87 @@ class StreamingSpec extends AnyFunSuite {
     val rows = spark.read.parquet(sinkDir)
     assert(rows.count() == 2) // malformed row survives as null record (PERMISSIVE from_json)
     assert(rows.filter(col("cad_event_number").isNull).count() == 1)
+  }
+
+  /** A decoded micro-batch as the file source hands it to foreachBatch:
+    * JSON lines read as text, then [[StreamPipeline.decode]]. */
+  private def decodedBatch(lines: String*): DataFrame = {
+    val f = Files.createTempDirectory("graft_stream_batch").resolve("batch.json")
+    Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+    StreamPipeline.decode(spark.read.text(f.toString))
+  }
+
+  private def sinkRows(dir: String): Long = spark.read.parquet(dir).count()
+
+  test("processBatch runs one Spark job per micro-batch and counts the rows it wrote (T3)") {
+    val sc = spark.sparkContext
+    val group = "graft-processBatch-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val batch = decodedBatch(record("P1", "911", "12"), record("P2", "ONVIEW", "3s"),
+      record("P3", "911", null))
+    val sinkDir = Files.createTempDirectory("graft_stream_jobs").toString
+    val sink = new StreamPipeline.KeyValueParquetSink(spark, sinkDir)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "processBatch job count")
+    val n =
+      try StreamPipeline.processBatch(batch, 7L, sink)
+      finally {
+        sc.clearJobGroup()
+        GraftTestBridge.drainListenerBus(sc)
+        sc.removeSparkListener(listener)
+      }
+    // the sink write alone: no cache fill, no separate count
+    assert(jobs.get == 1)
+    assert(n == 3L)
+    val written = spark.read.parquet(sinkDir)
+    assert(written.filter(col("epoch_id") === 7L).count() == 3L)
+    assert(written.select("cad_event_number").collect().map(_.getString(0)).toSet ==
+      Set("P1", "P2", "P3"))
+  }
+
+  test("a failing sink drops the batch: -1, no rows, nothing persisted, no wait (T7)") {
+    val sc = spark.sparkContext
+    val sinkDir = Files.createTempDirectory("graft_stream_fail").toString
+    val store = new StreamPipeline.KeyValueParquetSink(spark, sinkDir)
+    assert(StreamPipeline.processBatch(decodedBatch(record("F1", "911", "1")), 0L, store) == 1L)
+    // one sink fails inside its write job; the other throws before it runs
+    // the frame, so the observed count never arrives and must not be awaited
+    val failing = Seq(
+      new StreamPipeline.StreamSink {
+        def write(df: DataFrame, epochId: Long): Unit =
+          store.write(df.withColumn("cad_event_number",
+            when(col("cad_event_number").isNotNull, raise_error(lit("sink is down")))), epochId)
+      },
+      new StreamPipeline.StreamSink {
+        def write(df: DataFrame, epochId: Long): Unit =
+          throw new IllegalStateException("sink refused the batch")
+      })
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    failing.zipWithIndex.foreach { case (sink, i) =>
+      val epoch = i + 1L
+      val result = Future(StreamPipeline.processBatch(
+        decodedBatch(record("F2", "911", "1"), record("F3", "911", "2")), epoch, sink))
+      assert(Await.result(result, 2.minutes) == -1L)
+      assert(spark.read.parquet(sinkDir).filter(col("epoch_id") === epoch).isEmpty)
+    }
+    assert(sinkRows(sinkDir) == 1L)
+    assert(sc.getPersistentRDDs.keySet == persistedBefore)
+  }
+
+  test("an empty micro-batch counts 0 and adds no rows to the sink") {
+    val sinkDir = Files.createTempDirectory("graft_stream_empty").toString
+    val sink = new StreamPipeline.KeyValueParquetSink(spark, sinkDir)
+    def dataFiles = new java.io.File(sinkDir).listFiles.count(_.getName.endsWith(".parquet"))
+    assert(StreamPipeline.processBatch(decodedBatch(record("M1", "911", "1")), 0L, sink) == 1L)
+    val filesBefore = dataFiles
+    assert(StreamPipeline.processBatch(decodedBatch(record("M2", "911", "1")).limit(0), 1L, sink) == 0L)
+    assert(sinkRows(sinkDir) == 1L)
+    assert(dataFiles - filesBefore <= 1) // a schema-only file at most
   }
 
   test("watermarked stream dedup drops repeated (key, event-time) records across batches") {
